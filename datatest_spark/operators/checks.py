@@ -1,12 +1,19 @@
 """Suite check operators over the tokenized-sequence table (SURVEY §7.0).
 
-Each check is a named object with
-    ``check_id``                      — stable identifier;
-    ``violations(df, pk)``            — core-violations plan (row-level), or
-    ``stats_violations(stats_rows)``  — violations derived from the collected
-                                        wide-agg stats (partition-level).
-``pk`` is the partition_key Column already attached to ``df``. All plans
-stay JVM-side; the only pandas UDFs are the documented slow paths.
+Each check is a named object with a stable ``check_id`` and exactly one
+evaluation path:
+    ``row_conditions(df)``               — row checks: per-row conditions
+                                           that ``fuse_row_checks`` folds
+                                           into one scan; their
+                                           ``violations(df)`` is that scan
+                                           over the single check;
+    ``violations(df)``                   — plan checks: a dedicated
+                                           join/aggregation plan;
+    ``stats_violations(spark, rows)``    — violations derived from the
+                                           collected wide-agg stats
+                                           (partition-level).
+``df`` already carries the ``partition_key`` column. All plans stay
+JVM-side.
 """
 
 from __future__ import annotations
@@ -41,9 +48,13 @@ def _sel(df, check_id, kind, value, expected=None, deviation=None, doc_id=None,
 class BaseCheck(object):
     check_id = "base"
     uses_stats = False
+    # column a row check's violations attribute their ``doc_id`` from
+    id_col = "doc_id"
 
     def violations(self, df: DataFrame) -> DataFrame | None:
-        return None
+        """This check's violation plan alone. Row checks run the same
+        fused scan the suite runs; plan checks override this."""
+        return fuse_row_checks(df, [self])
 
     def stats_violations(self, spark, stats_rows) -> list:
         """Return violation row dicts derived from collected stats."""
@@ -51,7 +62,7 @@ class BaseCheck(object):
 
     def row_conditions(self, df: DataFrame) -> list | None:
         """Fusable per-row form: list of dicts with Column entries
-        {cond, kind, value, expected, deviation, doc_id, detail}.
+        {cond, kind, value, expected, deviation, detail}.
 
         Checks that return non-None here are FUSED into a single input
         scan by the suite runner (SURVEY §3.1 shuffle family (c)) — one
@@ -65,31 +76,40 @@ def fuse_row_checks(df: DataFrame, checks) -> DataFrame | None:
     """One scan for all fusable row-level checks.
 
     Builds, per check condition, a nullable violation struct; an
-    array+explode emits 0..n violations per input row. Catalyst prunes
-    the scan to exactly the columns the fused conditions touch, and the
-    whole select stays inside one WholeStageCodegen span.
+    array+explode emits 0..n violations per input row. Each violation's
+    ``doc_id`` comes from its own check's ``id_col`` (null when the frame
+    lacks the default ``doc_id`` column; a missing custom ``id_col`` is
+    an AnalysisException). Catalyst prunes the scan to exactly the columns
+    the fused conditions touch, and the whole select stays inside one
+    WholeStageCodegen span.
     """
+    def _s(col):
+        return col.cast("string") if col is not None else F.lit(None).cast("string")
+
     specs = []
     for check in checks:
         conds = check.row_conditions(df)
         if conds is None:
             return None
+        # only the default id column may be absent (null doc_id); a
+        # named one that is missing fails at analysis, not silently
+        doc_id = _s(None if check.id_col == "doc_id"
+                    and "doc_id" not in df.columns
+                    else F.col(check.id_col))
         for c in conds:
-            specs.append((check.check_id, c))
+            specs.append((check.check_id, doc_id, c))
     if not specs:
         return None
 
-    def _s(col):
-        return col.cast("string") if col is not None else F.lit(None).cast("string")
-
     structs = []
-    for check_id, c in specs:
+    for check_id, doc_id, c in specs:
         structs.append(
             F.when(
                 F.coalesce(c["cond"], F.lit(False)),
                 F.struct(
                     F.lit(check_id).alias("check_id"),
                     F.lit(c["kind"]).alias("kind"),
+                    doc_id.alias("doc_id"),
                     _s(c.get("value")).alias("value"),
                     _s(c.get("expected")).alias("expected"),
                     (
@@ -108,25 +128,19 @@ def fuse_row_checks(df: DataFrame, checks) -> DataFrame | None:
             ).alias("_v{0}".format(len(structs)))
         )
 
-    doc_col = (
-        F.col("doc_id").cast("string")
-        if "doc_id" in df.columns
-        else F.lit(None).cast("string")
-    )
     # Filter FIRST on the disjunction of all conditions — a pure codegen
     # predicate that prunes the ~99.9% clean rows before any struct/array
     # allocation. Without this the explode allocates per input row and
     # GC saturates at high thread counts (measured: 12.6s@8thr vs
     # 15.2s@32thr on 4M rows; with the pre-filter the scan scales).
     any_cond = None
-    for _, c in specs:
+    for _, _, c in specs:
         cc = F.coalesce(c["cond"], F.lit(False))
         any_cond = cc if any_cond is None else (any_cond | cc)
     exploded = (
         df.filter(any_cond)
         .select(
             F.col("partition_key"),
-            doc_col.alias("doc_id"),
             F.explode(F.array(*structs)).alias("_v"),
         )
         .filter(F.col("_v").isNotNull())
@@ -136,7 +150,7 @@ def fuse_row_checks(df: DataFrame, checks) -> DataFrame | None:
         F.col("_v.kind").alias("kind"),
         F.col("partition_key").cast("string").alias("partition_key"),
         F.lit(None).cast("string").alias("group_key"),
-        F.col("doc_id"),
+        F.col("_v.doc_id").alias("doc_id"),
         F.col("_v.value").alias("value"),
         F.col("_v.expected").alias("expected"),
         F.col("_v.deviation").alias("deviation"),
@@ -250,51 +264,20 @@ class StatIntervalCheck(BaseCheck):
 
 
 class UniquenessCheck(BaseCheck):
-    """doc_id uniqueness (A8/O3) with the C1 HLL screen.
-
-    ``screen_partitions(stats_rows)`` flags partitions whose
-    ``count - approx_distinct`` exceeds the HLL error margin; the exact
-    groupBy runs only over those partitions (SURVEY §7.3.3). At 10^12 rows
-    this turns a full 10^12-key shuffle into a shuffle over offending
-    partitions only; with Iceberg bucket(doc_id) layout the exact pass is
-    shuffle-free in prod.
-
-    Sensitivity caveat (which is why ``exact=True`` is the default): the
-    HLL estimate carries ~rsd relative error, so a duplicate rate below
-    the margin (e.g. 0.1% dups vs 5% rsd) is invisible to the screen.
-    Use ``exact="auto"`` only where the duplicate rates worth catching
-    exceed the margin, or where the bucketed layout makes the exact pass
-    cheap enough to trigger liberally.
-    """
+    """doc_id uniqueness (A8/O3): an exact ``groupBy(partition_key,
+    column)`` that emits one Extra row per surplus occurrence (a key
+    seen k times yields k-1 rows). With an Iceberg bucket(doc_id) layout
+    the groupBy is shuffle-free in prod."""
 
     check_id = "uniqueness"
-    uses_stats = True
 
-    def __init__(self, column="doc_id", hll_rsd_margin=0.05, exact=True):
+    def __init__(self, column="doc_id"):
         self.column = column
-        self.margin = hll_rsd_margin
-        self.exact = exact  # True | False | "auto"
 
-    def screen_partitions(self, stats_rows):
-        suspects = []
-        for row in stats_rows:
-            n = (row["n_rows"] or 0) - (row.get(self.column + "__nulls") or 0)
-            approx = row.get(self.column + "__approx_distinct")
-            if approx is None or n == 0:
-                continue
-            if n - approx > self.margin * n or (n - approx > 0 and n < 10_000):
-                suspects.append(row["partition_key"])
-        return suspects
-
-    def violations(self, df, only_partitions=None):
-        scoped = df
-        if only_partitions is not None:
-            if not only_partitions:
-                return None
-            scoped = df.filter(F.col("partition_key").isin(list(only_partitions)))
+    def violations(self, df):
         c = self.column
         counts = (
-            scoped.filter(F.col(c).isNotNull())
+            df.filter(F.col(c).isNotNull())
             .groupBy("partition_key", c)
             .agg(F.count(F.lit(1)).alias("_n"))
             .filter(F.col("_n") > 1)
@@ -331,11 +314,9 @@ class ReferentialCheck(BaseCheck):
 
     def row_conditions(self, df):
         # literal allowed sets fuse into the single row-scan via isin;
-        # DataFrame-valued sets need the broadcast join path (violations()).
-        # Custom id columns also fall back: the fused scan attributes
-        # violations via the frame's literal 'doc_id' column.
-        if (isinstance(self.allowed, DataFrame) or self.require_all
-                or self.id_col != "doc_id"):
+        # DataFrame-valued sets and require_all need the broadcast join
+        # path (violations())
+        if isinstance(self.allowed, DataFrame) or self.require_all:
             return None
         c = F.col(self.column)
         return [
@@ -347,6 +328,9 @@ class ReferentialCheck(BaseCheck):
         ]
 
     def violations(self, df):
+        fused = super().violations(df)
+        if fused is not None:
+            return fused
         spark = df.sparkSession
         field = [f for f in df.schema.fields if f.name == self.column][0]
         allowed = self._allowed_df(spark, field)
@@ -383,8 +367,6 @@ class ConsistencyCheck(BaseCheck):
         self.id_col = id_col
 
     def row_conditions(self, df):
-        if self.id_col != "doc_id":  # fused scan attributes via doc_id
-            return None
         lc, ac = F.col(self.length_col), F.col(self.array_col)
         return [
             dict(
@@ -404,25 +386,6 @@ class ConsistencyCheck(BaseCheck):
                 ),
             ),
         ]
-
-    def violations(self, df):
-        lc, ac = F.col(self.length_col), F.col(self.array_col)
-        both = df.filter(lc.isNotNull() & ac.isNotNull()).filter(
-            F.size(ac) != lc
-        )
-        dev = _sel(
-            both, self.check_id, "deviation",
-            F.size(ac), expected=lc,
-            deviation=F.size(ac).cast("double") - lc.cast("double"),
-            doc_id=F.col(self.id_col),
-        )
-        half_null = df.filter(lc.isNotNull() & ac.isNull())
-        inv = _sel(
-            half_null, self.check_id, "invalid", ac, expected=lc,
-            doc_id=F.col(self.id_col),
-            detail=F.create_map(F.lit("reason"), F.lit("tokens null, n_tok set")),
-        )
-        return dev.unionByName(inv)
 
 
 class LengthBoundCheck(BaseCheck):
@@ -477,12 +440,6 @@ class LengthBoundCheck(BaseCheck):
         return F.lit(lo if lo is not None else hi)
 
     def row_conditions(self, df):
-        # the fused scan attributes violations via the frame's literal
-        # 'doc_id' column; with a custom id column the fused rows would
-        # be unattributable (or wrongly attributed) — keep a dedicated
-        # plan in that case
-        if self.id_col != "doc_id":
-            return None
         lc = F.col(self.length_col)
         _lo, _hi, label = self._bounds()
         nearest = self._nearest(lc)
@@ -502,23 +459,6 @@ class LengthBoundCheck(BaseCheck):
             ),
         ]
 
-    def violations(self, df):
-        lc = F.col(self.length_col)
-        _lo, _hi, label = self._bounds()
-        nearest = self._nearest(lc)
-        dev = _sel(
-            df.filter(lc.isNotNull() & self._out_of_bounds(lc)),
-            self.check_id, "deviation", lc, expected=F.lit(label),
-            deviation=lc.cast("double") - nearest.cast("double"),
-            doc_id=F.col(self.id_col).cast("string"),
-        )
-        inv = _sel(
-            df.filter(lc.isNull()),
-            self.check_id, "invalid", lc, expected=F.lit(label),
-            doc_id=F.col(self.id_col).cast("string"),
-        )
-        return dev.unionByName(inv)
-
 
 class TokenRangeCheck(BaseCheck):
     """Every token id within [0, vocab): native forall over the array —
@@ -532,8 +472,6 @@ class TokenRangeCheck(BaseCheck):
         self.id_col = id_col
 
     def row_conditions(self, df):
-        if self.id_col != "doc_id":  # fused scan attributes via doc_id
-            return None
         ac = F.col(self.array_col)
         in_range = F.forall(
             ac, lambda t: t.isNotNull() & (t >= 0) & (t < self.vocab)
@@ -549,21 +487,6 @@ class TokenRangeCheck(BaseCheck):
                 expected=F.lit("[0,{0})".format(self.vocab)),
             )
         ]
-
-    def violations(self, df):
-        ac = F.col(self.array_col)
-        in_range = F.forall(
-            ac, lambda t: t.isNotNull() & (t >= 0) & (t < self.vocab)
-        )
-        bad = df.filter(ac.isNotNull() & ~in_range)
-        first_bad = F.filter(
-            ac, lambda t: t.isNull() | (t < 0) | (t >= self.vocab)
-        )[0]
-        return _sel(
-            bad, self.check_id, "invalid", first_bad,
-            expected=F.lit("[0,{0})".format(self.vocab)),
-            doc_id=F.col(self.id_col),
-        )
 
 
 class TokenBoundaryCheck(BaseCheck):
@@ -623,8 +546,6 @@ class TokenBoundaryCheck(BaseCheck):
         )
 
     def row_conditions(self, df):
-        if self.id_col != "doc_id":  # fused scan attributes via doc_id
-            return None
         ac = F.col(self.array_col)
         return [
             dict(
@@ -635,27 +556,16 @@ class TokenBoundaryCheck(BaseCheck):
             )
         ]
 
-    def violations(self, df):
-        ac = F.col(self.array_col)
-        return _sel(
-            df.filter(self._bad(ac)),
-            self.check_id, "invalid", self._value(ac),
-            expected=F.lit(self._label()),
-            doc_id=F.col(self.id_col).cast("string"),
-        )
-
 
 class TokenEqualityCheck(BaseCheck):
     """Per-row token-array equality vs the reference copy (J5/U3)."""
 
     check_id = "token_equality"
 
-    def __init__(self, reference_df, id_col="doc_id", tokens_col="tokens",
-                 use_udf=False):
+    def __init__(self, reference_df, id_col="doc_id", tokens_col="tokens"):
         self.reference = reference_df
         self.id_col = id_col
         self.tokens_col = tokens_col
-        self.use_udf = use_udf
 
     def violations(self, df):
         from .rowpred import token_equality_violations
@@ -664,7 +574,7 @@ class TokenEqualityCheck(BaseCheck):
         data = df.select("partition_key", self.id_col, self.tokens_col)
         core = token_equality_violations(
             data.drop("partition_key"), self.reference,
-            id_col=self.id_col, tokens_col=self.tokens_col, use_udf=self.use_udf,
+            id_col=self.id_col, tokens_col=self.tokens_col,
         )
         pk_map = data.select(
             F.col(self.id_col).cast("string").alias("doc_id"),

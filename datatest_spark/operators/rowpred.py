@@ -7,9 +7,10 @@ this is the sanctioned slow path: a **vectorized pandas UDF** (Arrow
 batches, never row-at-a-time Python — BASELINE.json:15).
 
 Token-array equality (J5/U3) is the per-row invariant vs the reference
-copy: the default is a pure JVM expression (``size`` + ``zip_with`` +
-``forall``); a pandas/Arrow UDF variant exists as the parity oracle and for
-benchmark comparison (SURVEY.md §2.9 U3).
+copy: an xxhash64 prefilter picks candidate ids, and the pure JVM
+expression ``arrays_equal_native`` (``size`` + ``zip_with`` + ``forall``)
+decides each candidate pair. ``arrays_equal_pandas`` is the Arrow-batched
+oracle tests hold it against (SURVEY.md §2.9 U3).
 """
 
 from __future__ import annotations
@@ -176,21 +177,19 @@ def token_equality_violations(
     reference: DataFrame,
     id_col: str = "doc_id",
     tokens_col: str = "tokens",
-    use_udf: bool = False,
-    compare: str = "hash",
 ) -> DataFrame:
     """Per-row token-array equality vs the reference copy (J5/U3).
 
-    ``compare="hash"`` (default, the scale path): each side reduces its
-    array to ``(id, xxhash64(tokens), size)`` before the join, so the
-    shuffle moves 16 bytes per row instead of the full token arrays
-    (measured 158s -> seconds on a 4M x ~290-token join at local[32]);
-    hash-unequal rows are definite mismatches, and only those rare rows
-    re-join their arrays for the first-diff-position detail. A 64-bit
-    collision (probability ~2^-64 per row) could mask a corruption; the
-    ``compare="full"`` form ships whole arrays through the join and is
-    exact — it is the oracle in tests, and the recommended layout at
-    10^12 is bucket-by-doc_id so even "full" avoids the shuffle.
+    Each side first reduces its arrays to ``(id, xxhash64(tokens), size,
+    is_null)``, so the candidate join shuffles a few bytes per row
+    instead of the full token arrays (measured 158s -> seconds on a 4M x
+    ~290-token join at local[32]). Ids with any differing triple are
+    candidates; only their rows re-join with full arrays, and
+    ``arrays_equal_native`` keeps the pairs that really differ — so the
+    matching copy of a duplicated id is not reported. A 64-bit hash
+    collision (probability ~2^-64 per row) could still hide a
+    corruption; at 10^12 the recommended layout is bucket-by-doc_id so
+    the joins avoid the shuffle.
 
     Rows present in the reference but absent from the data are Missing;
     mismatched arrays are Invalid with a compact detail. Column pruning:
@@ -199,42 +198,33 @@ def token_equality_violations(
     d = data.select(F.col(id_col).alias("_id"), F.col(tokens_col).alias("_a"))
     r = reference.select(F.col(id_col).alias("_id"), F.col(tokens_col).alias("_b"))
 
-    if compare == "hash" and not use_udf:
-        dh = d.select(
-            "_id",
-            F.xxhash64(F.col("_a")).alias("_ha"),
-            F.size(F.col("_a")).alias("_sa"),
-            F.col("_a").isNull().alias("_na"),
+    dh = d.select(
+        "_id",
+        F.xxhash64(F.col("_a")).alias("_ha"),
+        F.size(F.col("_a")).alias("_sa"),
+        F.col("_a").isNull().alias("_na"),
+    )
+    rh = r.select(
+        "_id",
+        F.xxhash64(F.col("_b")).alias("_hb"),
+        F.size(F.col("_b")).alias("_sb"),
+        F.col("_b").isNull().alias("_nb"),
+    )
+    bad_ids = (
+        dh.join(rh, "_id", "inner")
+        .filter(
+            (F.col("_ha") != F.col("_hb"))
+            | (F.col("_sa") != F.col("_sb"))
+            | (F.col("_na") != F.col("_nb"))
         )
-        rh = r.select(
-            "_id",
-            F.xxhash64(F.col("_b")).alias("_hb"),
-            F.size(F.col("_b")).alias("_sb"),
-            F.col("_b").isNull().alias("_nb"),
-        )
-        bad_ids = (
-            dh.join(rh, "_id", "inner")
-            .filter(
-                (F.col("_ha") != F.col("_hb"))
-                | (F.col("_sa") != F.col("_sb"))
-                | (F.col("_na") != F.col("_nb"))
-            )
-            .select("_id")
-        )
-        # rare mismatches: fetch both arrays for the detailed violation row
-        joined = (
-            d.join(bad_ids, "_id", "left_semi")
-            .join(r.join(bad_ids, "_id", "left_semi"), "_id", "inner")
-        )
-        mismatch = joined
-    else:
-        joined = d.join(r, "_id", "inner")
-        eq = (
-            arrays_equal_pandas(F.col("_a"), F.col("_b"))
-            if use_udf
-            else arrays_equal_native(F.col("_a"), F.col("_b"))
-        )
-        mismatch = joined.filter(~eq)
+        .select("_id")
+    )
+    # rare candidates: fetch both arrays, keep only the pairs that differ
+    mismatch = (
+        d.join(bad_ids, "_id", "left_semi")
+        .join(r.join(bad_ids, "_id", "left_semi"), "_id", "inner")
+        .filter(~arrays_equal_native(F.col("_a"), F.col("_b")))
+    )
     invalid = mismatch.select(
         F.lit("invalid").alias("kind"),
         F.lit(None).cast("string").alias("group_key"),

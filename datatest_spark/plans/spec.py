@@ -149,20 +149,10 @@ def _pair(value, what):
     return (value[0], value[1])
 
 
-def _take(params, spec, *names, **renames):
-    """Copy present keys through (specs stay sparse; check defaults rule)."""
-    out = {}
-    for n in names:
-        if n in spec:
-            out[n] = spec[n]
-    for spec_name, kw in renames.items():
-        if spec_name in spec:
-            out[kw] = spec[spec_name]
-    out.update(params)
-    return out
-
-
 # -- check builders --------------------------------------------------------
+# Each builder receives the check's spec minus "type", already checked
+# against the known keys listed next to it in CHECK_BUILDERS (specs stay
+# sparse; check defaults rule).
 
 def _build_schema_conformance(spec, dataframes):
     from ..operators.checks import SchemaConformanceCheck
@@ -194,59 +184,52 @@ def _build_stat_interval(spec, dataframes):
 def _build_uniqueness(spec, dataframes):
     from ..operators.checks import UniquenessCheck
 
-    return UniquenessCheck(**_take({}, spec, "column", "hll_rsd_margin",
-                                   "exact"))
+    return UniquenessCheck(**spec)
 
 
 def _build_referential(spec, dataframes):
     from ..operators.checks import ReferentialCheck
 
-    return ReferentialCheck(**_take({}, spec, "column", "allowed",
-                                    "require_all_present", "id_col"))
+    return ReferentialCheck(**spec)
 
 
 def _build_consistency(spec, dataframes):
     from ..operators.checks import ConsistencyCheck
 
-    return ConsistencyCheck(**_take({}, spec, "length_col", "array_col",
-                                    "id_col"))
+    return ConsistencyCheck(**spec)
 
 
 def _build_length_bound(spec, dataframes):
     from ..operators.checks import LengthBoundCheck
 
-    return LengthBoundCheck(**_take({}, spec, "length_col", "min_len",
-                                    "max_len", "id_col"))
+    return LengthBoundCheck(**spec)
 
 
 def _build_token_range(spec, dataframes):
     from ..operators.checks import TokenRangeCheck
 
-    return TokenRangeCheck(**_take({}, spec, "array_col", "vocab_size",
-                                   "id_col"))
+    return TokenRangeCheck(**spec)
 
 
 def _build_token_boundary(spec, dataframes):
     from ..operators.checks import TokenBoundaryCheck
 
-    return TokenBoundaryCheck(**_take({}, spec, "array_col", "bos_id",
-                                      "eos_id", "id_col"))
+    return TokenBoundaryCheck(**spec)
 
 
 def _build_token_equality(spec, dataframes):
     from ..operators.checks import TokenEqualityCheck
 
-    ref = _resolve_df(spec.get("reference"), dataframes,
+    kw = dict(spec)
+    ref = _resolve_df(kw.pop("reference", None), dataframes,
                       "token_equality.reference")
-    return TokenEqualityCheck(ref, **_take({}, spec, "id_col", "tokens_col",
-                                           "use_udf"))
+    return TokenEqualityCheck(ref, **kw)
 
 
 def _build_freshness(spec, dataframes):
     from ..operators.checks import FreshnessCheck
 
-    return FreshnessCheck(**_take({}, spec, "ts_col", "as_of_ms",
-                                  "max_age_ms", "min_ts_ms"))
+    return FreshnessCheck(**spec)
 
 
 def _build_functional_dependency(spec, dataframes):
@@ -255,10 +238,7 @@ def _build_functional_dependency(spec, dataframes):
     if "determinant" not in spec or "dependent" not in spec:
         raise SpecError("functional_dependency needs 'determinant' and "
                         "'dependent'")
-    return FunctionalDependencyCheck(
-        spec["determinant"], spec["dependent"],
-        **_take({}, spec, "max_violation_rate", "check_id")
-    )
+    return FunctionalDependencyCheck(**spec)
 
 
 def _build_benford(spec, dataframes):
@@ -266,41 +246,50 @@ def _build_benford(spec, dataframes):
 
     if "value_col" not in spec:
         raise SpecError("benford needs 'value_col'")
-    return BenfordCheck(spec["value_col"],
-                        **_take({}, spec, "max_chi2", "min_rows", "decimals",
-                                "check_id"))
+    return BenfordCheck(**spec)
 
 
 def _build_drift(spec, dataframes):
     from ..operators.drift import DriftCheck
 
-    baseline = spec.get("baseline")
+    kw = dict(spec)
+    baseline = kw.pop("baseline", None)
     if isinstance(baseline, list):
         # inline [[group, bucket, p], ...] rows — a baseline small enough
         # to live in the spec file itself
         baseline = [tuple(r) for r in baseline]
     else:
         baseline = _resolve_df(baseline, dataframes, "drift.baseline")
-    return DriftCheck(baseline, **_take({}, spec, "value_col", "group_col",
-                                        "lo", "hi", "nbins", "metric",
-                                        "threshold"))
+    return DriftCheck(baseline, **kw)
 
 
+# check type -> (builder, known spec keys besides "type")
 CHECK_BUILDERS = {
-    "schema_conformance": _build_schema_conformance,
-    "null_rate": _build_null_rate,
-    "stat_interval": _build_stat_interval,
-    "uniqueness": _build_uniqueness,
-    "referential": _build_referential,
-    "consistency": _build_consistency,
-    "length_bound": _build_length_bound,
-    "token_range": _build_token_range,
-    "token_boundary": _build_token_boundary,
-    "token_equality": _build_token_equality,
-    "freshness": _build_freshness,
-    "functional_dependency": _build_functional_dependency,
-    "benford": _build_benford,
-    "drift": _build_drift,
+    "schema_conformance": (_build_schema_conformance, {"fields"}),
+    "null_rate": (_build_null_rate, {"max_null_rate"}),
+    "stat_interval": (_build_stat_interval, {"bounds"}),
+    "uniqueness": (_build_uniqueness, {"column"}),
+    "referential": (_build_referential,
+                    {"column", "allowed", "require_all_present", "id_col"}),
+    "consistency": (_build_consistency,
+                    {"length_col", "array_col", "id_col"}),
+    "length_bound": (_build_length_bound,
+                     {"length_col", "min_len", "max_len", "id_col"}),
+    "token_range": (_build_token_range,
+                    {"array_col", "vocab_size", "id_col"}),
+    "token_boundary": (_build_token_boundary,
+                       {"array_col", "bos_id", "eos_id", "id_col"}),
+    "token_equality": (_build_token_equality,
+                       {"reference", "id_col", "tokens_col"}),
+    "freshness": (_build_freshness,
+                  {"ts_col", "as_of_ms", "max_age_ms", "min_ts_ms"}),
+    "functional_dependency": (_build_functional_dependency,
+                              {"determinant", "dependent",
+                               "max_violation_rate", "check_id"}),
+    "benford": (_build_benford, {"value_col", "max_chi2", "min_rows",
+                                 "decimals", "check_id"}),
+    "drift": (_build_drift, {"baseline", "value_col", "group_col", "lo",
+                             "hi", "nbins", "metric", "threshold"}),
 }
 
 
@@ -365,7 +354,9 @@ def _build_acc_instance(spec, dataframes):
 def _build_acc_fuzzy(spec, dataframes):
     from ..acceptances import AcceptedFuzzy
 
-    return AcceptedFuzzy(**_take({}, spec, "cutoff"))
+    if "cutoff" in spec:
+        return AcceptedFuzzy(cutoff=spec["cutoff"])
+    return AcceptedFuzzy()
 
 
 def _build_acc_keys(spec, dataframes):
@@ -419,8 +410,7 @@ def _build_acceptance(spec, dataframes):
 
 # -- entry points ----------------------------------------------------------
 
-_SUITE_KEYS = ("partition_cols", "stats_columns", "quantiles",
-               "salted_stats", "n_salts")
+_SUITE_KEYS = ("partition_cols", "stats_columns", "quantiles")
 
 
 def suite_from_spec(spec, dataframes=None):
@@ -450,8 +440,15 @@ def suite_from_spec(spec, dataframes=None):
         if t not in CHECK_BUILDERS:
             raise SpecError("unknown check type %r (known: %s)"
                             % (t, ", ".join(sorted(CHECK_BUILDERS))))
+        build, known = CHECK_BUILDERS[t]
         params = {k: v for k, v in c.items() if k != "type"}
-        checks.append(CHECK_BUILDERS[t](params, dataframes))
+        unknown = set(params) - known
+        if unknown:
+            # a typo'd parameter must not run the check with its default
+            raise SpecError("unknown keys %s for check %r (known: %s)"
+                            % (sorted(unknown), t,
+                               ", ".join(sorted(known))))
+        checks.append(build(params, dataframes))
     acceptances = [_build_acceptance(a, dataframes)
                    for a in spec.get("acceptances", [])]
     kwargs = {k: spec[k] for k in _SUITE_KEYS if k in spec}

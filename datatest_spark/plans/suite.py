@@ -20,9 +20,16 @@ from pyspark.sql import functions as F
 from ..differences import ValidationError
 from ..schema import MANIFEST_SCHEMA, VIOLATION_SCHEMA
 from ..validation import _rows_to_differences
-from ..operators.checks import SchemaConformanceCheck, UniquenessCheck
+from ..operators.checks import SchemaConformanceCheck, fuse_row_checks
 from ..operators.drift import DriftCheck
 from ..operators.stats import _stat_exprs, partition_key_col, DEFAULT_QUANTILES
+
+# verdict pseudo-partition for violations with no partition_key (schema
+# conformance, required-but-missing rows)
+GLOBAL_KEY = "__global__"
+# manifest metrics flag of a verdict key that is not a suite partition
+# (GLOBAL_KEY, drift groups): recorded for re-emission, never skipped
+_FRAME_LEVEL = "frame_level"
 
 
 class SuiteResult(object):
@@ -67,19 +74,12 @@ class ValidationSuite(object):
     """
 
     def __init__(self, checks, partition_cols=("source",), acceptances=None,
-                 stats_columns=None, quantiles=DEFAULT_QUANTILES,
-                 salted_stats=False, n_salts=16):
+                 stats_columns=None, quantiles=DEFAULT_QUANTILES):
         self.checks = list(checks)
         self.partition_cols = list(partition_cols)
         self.acceptances = list(acceptances or [])
         self.stats_columns = stats_columns
         self.quantiles = quantiles
-        # C2: explicit two-phase salted aggregation for deployments where
-        # one hot partition key saturates a reducer even after Spark's
-        # map-side partial aggregation. Mergeable metrics only (count/
-        # nulls/min/max/HLL-union); quantile sketches stay single-pass.
-        self.salted_stats = salted_stats
-        self.n_salts = n_salts
 
     # -- manifest / resume (C3) -------------------------------------------
     @staticmethod
@@ -116,15 +116,18 @@ class ValidationSuite(object):
             latest[r["partition_key"]] = r
         return list(latest.values())
 
-    def _metrics_from_rows(self, rows):
+    def _metrics_from_rows(self, rows, frame_level=False):
         """{partition_key: metrics map} for partitions whose recorded
         ``checks_done`` covers this suite's checks (latest manifest row
-        per partition wins)."""
+        per partition wins). ``frame_level=True`` returns the recorded
+        verdict keys that are not suite partitions instead."""
         check_ids = set(c.check_id for c in self.checks)
         out = {}
         for r in self._latest_rows(rows):
-            if check_ids <= set(r["checks_done"] or []):
-                out[r["partition_key"]] = dict(r["metrics"] or {})
+            m = dict(r["metrics"] or {})
+            if (check_ids <= set(r["checks_done"] or [])
+                    and bool(m.get(_FRAME_LEVEL)) == frame_level):
+                out[r["partition_key"]] = m
         return out
 
     def completed_partition_metrics(self, spark, manifest_dir, run_id):
@@ -245,6 +248,7 @@ class ValidationSuite(object):
             pass
 
         skipped_metrics = {}
+        recorded_frame = {}
         if resume and manifest_dir:
             # ONE manifest read serves both the input-hash guard and the
             # skip-set. A resumed run_id must be the SAME dataset:
@@ -292,6 +296,7 @@ class ValidationSuite(object):
                     )
                 )
             skipped_metrics = self._metrics_from_rows(mrows)
+            recorded_frame = self._metrics_from_rows(mrows, frame_level=True)
             if skipped_metrics:
                 keyed = keyed.filter(
                     ~F.col("partition_key").isin(list(skipped_metrics))
@@ -302,28 +307,16 @@ class ValidationSuite(object):
             int(m.get("n_rows") or 0) for m in skipped_metrics.values()
         )
 
-        # (a) the single wide aggregation pass (C1) — or the salted
-        # two-phase variant (C2) when configured.
+        # (a) the single wide aggregation pass (C1)
         stats_cols = self.stats_columns or [
             c for c in df.columns if c != "partition_key"
         ]
-        if self.salted_stats:
-            from ..operators.stats import column_stats_salted
-
-            stats_rows = [
-                r.asDict()
-                for r in column_stats_salted(
-                    keyed.drop("partition_key"), self.partition_cols,
-                    stats_cols, n_salts=self.n_salts
-                ).collect()
-            ]
-        else:
-            stats_rows = [
-                r.asDict()
-                for r in keyed.groupBy("partition_key")
-                .agg(*_stat_exprs(df, stats_cols, self.quantiles))
-                .collect()
-            ]
+        stats_rows = [
+            r.asDict()
+            for r in keyed.groupBy("partition_key")
+            .agg(*_stat_exprs(df, stats_cols, self.quantiles))
+            .collect()
+        ]
         _mark("stats_pass")
         # resumed partitions count toward the total: a monitor comparing
         # n_rows against the expected table size must not false-alarm on
@@ -334,28 +327,25 @@ class ValidationSuite(object):
         # (b)+(c) violation plans per check. Row-level checks that expose
         # row_conditions() are FUSED into one input scan (shuffle family
         # (c) = exactly one job); join/agg checks keep dedicated plans.
-        from ..operators.checks import fuse_row_checks
-
+        # A resume whose skip-set covers every partition validated
+        # nothing new: only schema conformance runs (it reads the schema,
+        # not rows); every other check's verdicts are the recorded ones
+        # (frame-independent checks such as drift and token equality
+        # would read the empty remainder as all-missing).
+        validated_any = bool(stats_rows) or not skipped
+        run_checks = self.checks if validated_any else [
+            c for c in self.checks if isinstance(c, SchemaConformanceCheck)
+        ]
         driver_rows = []
         plans = []
         fusable = []
-        for check in self.checks:
+        for check in run_checks:
             if isinstance(check, SchemaConformanceCheck):
                 for d in check.schema_violations(keyed):
                     d.setdefault("check_id", check.check_id)
                     driver_rows.append(d)
             elif isinstance(check, DriftCheck):
                 driver_rows.extend(check.drift_violations(keyed))
-            elif isinstance(check, UniquenessCheck):
-                if check.exact == "auto":
-                    suspects = check.screen_partitions(stats_rows)
-                    plan = check.violations(keyed, only_partitions=suspects)
-                elif check.exact:
-                    plan = check.violations(keyed)
-                else:
-                    plan = None
-                if plan is not None:
-                    plans.append(plan)
             elif check.uses_stats:
                 driver_rows.extend(check.stats_violations(spark, stats_rows))
             elif check.row_conditions(keyed) is not None:
@@ -425,6 +415,21 @@ class ValidationSuite(object):
             if self.acceptances
             else dict(pre_counts)
         )
+        if not validated_any:
+            # the verdicts outside the suite partitions (GLOBAL_KEY,
+            # drift groups) of the checks that did not run come back
+            # from the manifest, like the partition verdicts below —
+            # else a retry of a run that failed only there would pass
+            ran = set(c.check_id for c in run_checks)
+            for key, m in recorded_frame.items():
+                pk = None if key == GLOBAL_KEY else key
+                for c in self.checks:
+                    pre = int(m.get("n_violations_pre__" + c.check_id) or 0)
+                    if pre and c.check_id not in ran:
+                        pre_counts[(pk, c.check_id)] = pre
+                        post_counts[(pk, c.check_id)] = int(
+                            m.get("n_violations__" + c.check_id) or 0
+                        )
 
         _mark("acceptances")
         if violations_sink:
@@ -469,10 +474,10 @@ class ValidationSuite(object):
         # require_all missing rows): they must appear in the verdict
         # domain or the suite reports a silent false pass.
         pk_domain = set(all_partitions) | {
-            pk if pk is not None else "__global__" for (pk, _c) in list(pre_counts)
+            pk if pk is not None else GLOBAL_KEY for (pk, _c) in list(pre_counts)
         }
         for pk in sorted(pk_domain):
-            lookup_pk = None if pk == "__global__" else pk
+            lookup_pk = None if pk == GLOBAL_KEY else pk
             for check in self.checks:
                 pre = pre_counts.get((lookup_pk, check.check_id), 0)
                 post = post_counts.get((lookup_pk, check.check_id), 0)
@@ -523,49 +528,34 @@ class ValidationSuite(object):
         verdicts = spark.createDataFrame(verdict_rows, VERDICT_SCHEMA)
 
         if manifest_dir:
-            partition_rows = [
-                (
-                    pk,
-                    dict(
-                        {
-                            "n_rows": float(n_rows_by_pk.get(pk) or 0),
-                            "n_violations": float(
-                                sum(
-                                    v
-                                    for (p, _c), v in post_counts.items()
-                                    if p == pk
-                                )
-                            ),
-                            "wall_ms": float(wall_ms),
-                        },
-                        **{
-                            k: v
-                            for c in self.checks
-                            for k, v in (
-                                (
-                                    "n_violations__" + c.check_id,
-                                    float(
-                                        post_counts.get(
-                                            (pk, c.check_id), 0
-                                        )
-                                    ),
-                                ),
-                                # pre-acceptance count so a resumed
-                                # fully-accepted check re-reads as
-                                # 'accepted', not 'pass'
-                                (
-                                    "n_violations_pre__" + c.check_id,
-                                    float(
-                                        pre_counts.get(
-                                            (pk, c.check_id), 0
-                                        )
-                                    ),
-                                ),
-                            )
-                        }
-                    ),
-                )
-                for pk in all_partitions
+            def _recorded(pk, **extra):
+                lookup_pk = None if pk == GLOBAL_KEY else pk
+                m = {
+                    "n_rows": float(n_rows_by_pk.get(pk) or 0),
+                    "n_violations": float(sum(
+                        v for (p, _c), v in post_counts.items()
+                        if p == lookup_pk
+                    )),
+                    "wall_ms": float(wall_ms),
+                }
+                for c in self.checks:
+                    m["n_violations__" + c.check_id] = float(
+                        post_counts.get((lookup_pk, c.check_id), 0)
+                    )
+                    # pre-acceptance count so a resumed fully-accepted
+                    # check re-reads as 'accepted', not 'pass'
+                    m["n_violations_pre__" + c.check_id] = float(
+                        pre_counts.get((lookup_pk, c.check_id), 0)
+                    )
+                m.update(extra)
+                return (pk, m)
+
+            # verdict keys outside the suite partitions are recorded too
+            # (flagged, never skipped) so a full-skip retry re-emits them
+            frame_keys = pk_domain - set(all_partitions) - skipped
+            partition_rows = [_recorded(pk) for pk in all_partitions] + [
+                _recorded(pk, **{_FRAME_LEVEL: 1.0})
+                for pk in sorted(frame_keys)
             ]
             self._write_manifest(
                 spark, manifest_dir, run_id, partition_rows,
@@ -607,8 +597,8 @@ def north_star_suite(
     extra_checks=None,
 ):
     """The full constraint suite of the north star (BASELINE.json:6):
-    schema conformance, per-column stats thresholds, uniqueness (HLL
-    screen + exact), referential membership, n_tok consistency, token
+    schema conformance, per-column stats thresholds, exact uniqueness,
+    referential membership, n_tok consistency, token
     range, optional drift and token-equality-vs-reference.
     ``extra_checks`` appends caller-supplied check objects (e.g. a
     row-level ``LengthBoundCheck``) without changing the default

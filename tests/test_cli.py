@@ -209,6 +209,26 @@ class TestCliReviewFixes:
         ])
         assert rc == 1 and s["global_fail"] is True
 
+    def test_full_skip_retry_keeps_global_fail(self, spark, tmp_path,
+                                               capsys):
+        # a run that failed only on the table-global schema check must
+        # still fail when retried on its run-id: every partition is
+        # skipped, and the global verdict comes back from the manifest
+        path = str(tmp_path / "widetype")
+        spark.createDataFrame(
+            [("1", [1], 1, "web")],
+            "doc_id string, tokens array<int>, n_tok bigint, source string",
+        ).write.parquet(path)
+        argv = ["--input", path, "--allowed-sources", "web",
+                "--run-id", "t-glob-retry",
+                "--manifest-dir", str(tmp_path / "m")]
+        rc, s = _run(capsys, argv)
+        assert rc == 1 and s["global_fail"] is True
+        assert s["failed_partitions"] == 0
+        rc, s = _run(capsys, argv)
+        assert rc == 1 and s["global_fail"] is True
+        assert s["status"] == "fail"
+
 
 class TestRowLengthBounds:
     def test_length_bound_flag_fails_long_rows(self, spark, token_table,

@@ -142,6 +142,18 @@ class TestSpecErrors:
             suite_from_spec({"checks": [{"type": "uniqueness"}],
                              "partiton_cols": ["source"]})
 
+    @pytest.mark.parametrize("check,key", [
+        ({"type": "length_bound", "maxlen": 10}, "maxlen"),
+        ({"type": "uniqueness", "exact": "auto"}, "exact"),
+        ({"type": "uniqueness", "hll_rsd_margin": 0.1}, "hll_rsd_margin"),
+        ({"type": "token_equality", "reference": "@ref", "use_udf": True},
+         "use_udf"),
+    ])
+    def test_unknown_check_key_is_loud(self, check, key):
+        # a typo'd or removed check parameter must not run with defaults
+        with pytest.raises(SpecError, match="unknown keys.*%s" % key):
+            suite_from_spec({"checks": [check]})
+
     def test_empty_checks(self):
         with pytest.raises(SpecError, match="non-empty 'checks'"):
             suite_from_spec({"checks": []})

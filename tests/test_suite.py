@@ -10,6 +10,7 @@ from datatest_spark.operators.checks import (
     ConsistencyCheck,
     NullRateCheck,
     ReferentialCheck,
+    TokenEqualityCheck,
     TokenRangeCheck,
     UniquenessCheck,
 )
@@ -18,12 +19,38 @@ from datatest_spark.operators.stats import column_stats, column_stats_salted
 from datatest_spark.plans.suite import ValidationSuite, north_star_suite
 from datatest_spark.sources.synth import (
     ALLOWED_SOURCES,
+    VOCAB_SIZE,
     allowed_sources,
     ref_tokens,
     tokenized_sequences,
 )
 
 N = 5000
+
+
+def _dup_token_frames(spark):
+    """Data + reference where some doc_ids are duplicated: a duplicate
+    row reuses the previous row's id with its own tokens, so one copy of
+    the id matches the reference and the other does not."""
+    data = tokenized_sequences(spark, 600, seed=21, dup_rate=0.05,
+                               len_mismatch_rate=0, bad_source_rate=0,
+                               null_rate=0)
+    ref = ref_tokens(spark, 600, seed=21, corrupt_rate=0.02,
+                     missing_rate=0.01)
+    return data, ref
+
+
+def _token_equality_oracle(data, ref):
+    """Plain-Python (kind, doc_id) list of the token-equality violations:
+    one invalid per data row whose tokens differ from its reference row,
+    one missing per reference row whose id the data lacks."""
+    data_rows = [(r["doc_id"], r["tokens"]) for r in data.collect()]
+    ref_by_id = {r["doc_id"]: r["tokens"] for r in ref.collect()}
+    data_ids = {i for i, _ in data_rows}
+    out = [("invalid", i) for i, a in data_rows
+           if i in ref_by_id and a != ref_by_id[i]]
+    out += [("missing", i) for i in ref_by_id if i not in data_ids]
+    return sorted(out)
 
 
 @pytest.fixture(scope="module")
@@ -354,25 +381,90 @@ class TestSuiteEndToEnd:
         assert n_corrupt > 0
 
     def test_token_equality_native_vs_udf_parity(self, spark):
-        data = tokenized_sequences(spark, 400, seed=31, dup_rate=0,
-                                   len_mismatch_rate=0, bad_source_rate=0, null_rate=0)
-        ref = ref_tokens(spark, 400, seed=31, corrupt_rate=0.05, missing_rate=0.0)
-        from datatest_spark.operators.rowpred import token_equality_violations
+        # the single hash-prefilter path against the Arrow-batched
+        # oracle, on input where duplicated ids have a matching copy
+        from datatest_spark.operators.rowpred import (
+            arrays_equal_pandas,
+            token_equality_violations,
+        )
 
+        data, ref = _dup_token_frames(spark)
         native = sorted(
             r["doc_id"]
-            for r in token_equality_violations(data, ref, use_udf=False).collect()
+            for r in token_equality_violations(data, ref)
+            .filter("kind = 'invalid'").collect()
+        )
+        joined = data.select("doc_id", F.col("tokens").alias("_a")).join(
+            ref.select("doc_id", F.col("tokens").alias("_b")), "doc_id"
         )
         via_udf = sorted(
             r["doc_id"]
-            for r in token_equality_violations(data, ref, use_udf=True).collect()
+            for r in joined.filter(
+                ~arrays_equal_pandas(F.col("_a"), F.col("_b"))
+            ).collect()
         )
         assert native == via_udf and len(native) > 0
 
+    def test_token_equality_duplicated_ids_match_oracle(self, spark):
+        data, ref = _dup_token_frames(spark)
+        ref_by_id = {r["doc_id"]: r["tokens"] for r in ref.collect()}
+        copies = {}
+        for r in data.collect():
+            copies.setdefault(r["doc_id"], []).append(
+                r["tokens"] == ref_by_id.get(r["doc_id"])
+            )
+        # the defect's shape is present: an id with one matching and one
+        # mismatching copy
+        assert any(len(c) > 1 and any(c) and not all(c)
+                   for c in copies.values())
+        keyed = data.withColumn(
+            "partition_key", F.concat(F.lit("source="), "source")
+        )
+        got = sorted(
+            (r["kind"], r["doc_id"])
+            for r in TokenEqualityCheck(ref).violations(keyed).collect()
+        )
+        assert got == _token_equality_oracle(data, ref)
+
+    def test_full_skip_resume_reemits_recorded_verdicts(self, spark,
+                                                        tmp_path):
+        # a resume whose skip-set covers every partition must evaluate
+        # nothing: drift and token equality over the empty remainder
+        # would report every baseline group and reference row missing.
+        # It re-emits every recorded verdict, the table-global ones too.
+        data = tokenized_sequences(spark, 600, seed=21, dup_rate=0,
+                                   len_mismatch_rate=0, bad_source_rate=0,
+                                   null_rate=0)
+        # the reference's 20 extra rows are absent from the data: their
+        # 'missing' rows carry no partition (the __global__ verdict)
+        ref = ref_tokens(spark, 620, seed=21, corrupt_rate=0.02,
+                         missing_rate=0)
+        base = histogram(data, "n_tok", "source", 0, 2048, 16)
+        suite = ValidationSuite(
+            [DriftCheck(base, lo=0, hi=2048, nbins=16),
+             TokenEqualityCheck(ref)],
+            partition_cols=("source",),
+            stats_columns=["n_tok"],
+        )
+        mdir = str(tmp_path / "m")
+        first = suite.run(data, run_id="fs", manifest_dir=mdir)
+        second = suite.run(data, run_id="fs", manifest_dir=mdir)
+
+        def key(r):
+            return (r["partition_key"], r["check_id"], r["status"],
+                    r["n_violations"])
+
+        v1 = sorted(key(r) for r in first.verdicts.collect())
+        v2 = sorted(key(r) for r in second.verdicts.collect())
+        assert second.stats_rows == []
+        assert v2 == v1
+        assert {"pass", "fail"} <= {v[2] for v in v1}
+        assert any(v[0] == "__global__" and v[2] == "fail" for v in v1)
+
 
 class TestRowCheckFusion:
-    """Fused single-scan row checks produce exactly the violations the
-    dedicated per-check plans produce (SURVEY §3.1 family (c))."""
+    """Fused single-scan row checks (SURVEY §3.1 family (c)) produce the
+    violations a plain-Python reading of each check's rule finds."""
 
     def test_fused_equals_dedicated(self, spark, seqs):
         from datatest_spark.operators.checks import fuse_row_checks
@@ -380,22 +472,38 @@ class TestRowCheckFusion:
         keyed = seqs.withColumn(
             "partition_key", F.concat(F.lit("source="), F.coalesce("source", F.lit("null")))
         )
+        # the synthetic ids span the full vocabulary: one id less puts
+        # the top id out of range in a few percent of rows
+        vocab = VOCAB_SIZE - 1
         checks = [
             ConsistencyCheck(),
-            TokenRangeCheck(),
+            TokenRangeCheck(vocab_size=vocab),
             ReferentialCheck("source", allowed=ALLOWED_SOURCES),
         ]
         fused = fuse_row_checks(keyed, checks)
         assert fused is not None
         fused_rows = sorted(
-            (r["check_id"], r["kind"], r["doc_id"], r["value"])
-            for r in fused.collect()
+            ((r["check_id"], r["kind"], r["doc_id"], r["value"])
+             for r in fused.collect()),
+            key=repr,
         )
-        dedicated = []
-        for c in checks:
-            for r in c.violations(keyed).collect():
-                dedicated.append((c.check_id, r["kind"], r["doc_id"], r["value"]))
-        assert fused_rows == sorted(dedicated)
+        oracle = []
+        for r in seqs.collect():
+            toks, n_tok, d = r["tokens"], r["n_tok"], r["doc_id"]
+            if n_tok is not None and toks is not None and len(toks) != n_tok:
+                oracle.append(("n_tok_consistency", "deviation", d,
+                               str(len(toks))))
+            if n_tok is not None and toks is None:
+                oracle.append(("n_tok_consistency", "invalid", d, None))
+            bad = [t for t in toks or []
+                   if t is None or t < 0 or t >= vocab]
+            if bad:
+                oracle.append(("token_range", "invalid", d,
+                               None if bad[0] is None else str(bad[0])))
+            if r["source"] not in ALLOWED_SOURCES:
+                oracle.append(("referential", "extra", d, r["source"]))
+        assert {o[0] for o in oracle} == {c.check_id for c in checks}
+        assert fused_rows == sorted(oracle, key=repr)
 
     def test_fused_is_single_scan(self, spark, seqs):
         from datatest_spark.operators.checks import fuse_row_checks
@@ -410,27 +518,46 @@ class TestRowCheckFusion:
         assert "Exchange" not in plan
         assert plan.count("Scan") <= 1
 
+    def test_custom_id_col_fuses(self, spark):
+        from datatest_spark.operators.checks import fuse_row_checks
 
-class TestSaltedSuite:
-    """C2 wiring: the salted two-phase stats path produces the same
-    verdicts as the single-pass suite."""
+        df = spark.createDataFrame(
+            [("s1", [1, 2], 2, "web"),       # clean
+             ("s2", [1, 2], 3, "web"),       # n_tok != size(tokens)
+             ("s3", [1, 99999], 2, "wiki")],  # token out of vocab
+            "seq_id string, tokens array<int>, n_tok int, source string",
+        )
+        suite = ValidationSuite(
+            [ConsistencyCheck(id_col="seq_id"),
+             TokenRangeCheck(id_col="seq_id")],
+            partition_cols=("source",),
+            stats_columns=["n_tok"],
+        )
+        keyed = df.withColumn("partition_key", F.lit("all"))
+        fused = fuse_row_checks(keyed, suite.checks)
+        plan = fused._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan
+        assert plan.count("Scan") <= 1
+        res = suite.run(df, run_id="idc")
+        assert sorted(
+            (r["check_id"], r["doc_id"]) for r in res.violations.collect()
+        ) == [("n_tok_consistency", "s2"), ("token_range", "s3")]
 
-    def test_salted_suite_same_verdicts(self, spark, seqs):
-        plain = north_star_suite(ALLOWED_SOURCES)
-        res_p = plain.run(seqs, run_id="sp")
-        salted = north_star_suite(ALLOWED_SOURCES)
-        salted.salted_stats = True
-        res_s = salted.run(seqs, run_id="ss")
-        vp = sorted(
-            (r["partition_key"], r["check_id"], r["status"], r["n_violations"])
-            for r in res_p.verdicts.collect()
-        )
-        vs = sorted(
-            (r["partition_key"], r["check_id"], r["status"], r["n_violations"])
-            for r in res_s.verdicts.collect()
-        )
-        assert vp == vs
-        assert res_p.n_rows_total == res_s.n_rows_total
+    def test_missing_custom_id_col_is_loud(self, spark):
+        # a typo'd id column must fail, not emit unattributed violations;
+        # only the default doc_id may be absent
+        from pyspark.errors import AnalysisException
+
+        df = spark.createDataFrame(
+            [("s2", [1, 2], 3, "web")],
+            "seq_id string, tokens array<int>, n_tok int, source string",
+        ).withColumn("partition_key", F.lit("all"))
+        with pytest.raises(AnalysisException):
+            ConsistencyCheck(id_col="seqid").violations(df).collect()
+        rows = ConsistencyCheck().violations(df).collect()
+        assert [(r["kind"], r["doc_id"]) for r in rows] == [
+            ("deviation", None)
+        ]
 
 
 class TestFreshness:
